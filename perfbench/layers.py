@@ -9,9 +9,11 @@ Layers (names as reported, ``<layer>.<metric>``):
   ``materialize`` and the ``bounded_iteration`` fixed-point zone;
 - ``action``: the benchmark's final ``collect``;
 - ``spark``: jobs, stages and tasks from the event log, attributed to the
-  query whose execution window holds the job's submission time (every
-  workload runs one client, so windows do not overlap). Streaming progress
-  events come from the same log.
+  query execution named by the ``QUERY_PROPERTY`` local property the
+  benchmark sets before each traced query. (Not the job group: a stream's
+  micro-batch thread replaces the group with its own run id, while it
+  inherits other local properties.) Streaming progress events come from the
+  same log and count when they fall inside the traced passes.
 
 Wrapping replaces the function in every module that bound it, under any
 name, so calls from inside the package are traced as well. Spans are kept
@@ -30,6 +32,9 @@ import sys
 import threading
 import time
 
+#: local property that names the query execution a job belongs to
+QUERY_PROPERTY = "perfbench.query"
+
 #: query-function layer by package sub-module; other query functions (the
 #: source-format queries) count as plans
 _QUERY_LAYERS = (
@@ -39,11 +44,13 @@ _QUERY_LAYERS = (
 
 
 class Tracer:
-    """Span recorder. Spans are ``[layer, name, start, end, parent]`` with
-    epoch-second times, so they line up with event-log timestamps."""
+    """Span recorder. Spans are ``[layer, name, start, end, parent, query]``
+    with epoch-second times, so they line up with event-log timestamps;
+    ``query`` is the id of the query execution the span belongs to."""
 
     def __init__(self) -> None:
         self.enabled = False
+        self.query: str | None = None
         self.spans: list[list] = []
         self._stack = threading.local()
 
@@ -55,7 +62,7 @@ class Tracer:
         stack = getattr(self._stack, "ids", None)
         if stack is None:
             stack = self._stack.ids = []
-        rec = [layer, name, time.time(), None, stack[-1] if stack else -1]
+        rec = [layer, name, time.time(), None, stack[-1] if stack else -1, self.query]
         self.spans.append(rec)
         stack.append(len(self.spans) - 1)
         try:
@@ -126,6 +133,31 @@ def install(tracer: Tracer, entry) -> None:
     _rebind(replacement)
 
 
+def unit_costs(sc, calls: int = 20000, props: int = 200) -> dict[str, float]:
+    """What tracing adds, measured directly: the cost of one traced call
+    (wrapper plus span record) over a plain call, and of setting the query
+    property, the one JVM call tracing makes per query."""
+    tracer = Tracer()
+    tracer.enabled = True
+
+    def noop():
+        return None
+
+    traced = tracer.wrap("x", noop)
+    t = time.perf_counter()
+    for _ in range(calls):
+        noop()
+    plain_s = time.perf_counter() - t
+    t = time.perf_counter()
+    for _ in range(calls):
+        traced()
+    span_s = max(0.0, time.perf_counter() - t - plain_s) / calls
+    t = time.perf_counter()
+    for i in range(props):
+        sc.setLocalProperty(QUERY_PROPERTY, f"cost:{i}")
+    return {"span_s": span_s, "property_s": (time.perf_counter() - t) / props}
+
+
 # --------------------------------------------------------------- event log
 
 
@@ -137,7 +169,7 @@ def _epoch(iso: str) -> float:
 
 def read_event_log(log_dir: str) -> dict:
     """Jobs, stages, tasks and streaming progress from a plain-JSON event log."""
-    jobs: dict[int, float] = {}
+    jobs: dict[int, tuple[float, str | None]] = {}
     stage_job: dict[int, int] = {}
     stages: list[int] = []
     tasks: list[dict] = []
@@ -151,7 +183,10 @@ def read_event_log(log_dir: str) -> dict:
                 kind = ev.get("Event", "")
                 if kind == "SparkListenerJobStart":
                     jid = ev["Job ID"]
-                    jobs[jid] = ev["Submission Time"] / 1000.0
+                    jobs[jid] = (
+                        ev["Submission Time"] / 1000.0,
+                        (ev.get("Properties") or {}).get(QUERY_PROPERTY),
+                    )
                     for sid in ev.get("Stage IDs", ()):
                         stage_job[sid] = jid
                 elif kind == "SparkListenerStageCompleted":
@@ -219,25 +254,21 @@ def layer_metrics(
     log: dict,
     cores: int,
 ) -> dict[str, float]:
-    """Per-pass layer totals. ``executions`` are the traced timed query runs,
-    each ``{"pass", "start", "end", "rows"}`` in epoch seconds."""
+    """Per-pass layer totals. ``executions`` are the traced query runs,
+    each ``{"id", "pass", "start", "end", "rows"}`` in epoch seconds."""
     n_pass = max(1, len({e["pass"] for e in executions}))
+    by_id = {e["id"]: e for e in executions}
     out: dict[str, float] = {}
 
     def add(key: str, v: float) -> None:
         out[key] = out.get(key, 0.0) + v
 
-    def owner(t: float):
-        for ex in executions:
-            if ex["start"] <= t <= ex["end"]:
-                return ex
-        return None
-
     # spans: build and self time per layer, calls of the sources layer
+    add("trace.spans", len(spans))
     own = _self_time(spans)
     top = [i for i, s in enumerate(spans) if s[4] < 0 or spans[s[4]][0] == "query"]
     for i, s in enumerate(spans):
-        layer, name, start, end, _parent = s
+        layer, name, start, end, _parent, _query = s
         if layer == "query":
             continue
         base = layer.split(".")[0]
@@ -252,14 +283,19 @@ def layer_metrics(
         elif layer == "action":
             add("action.s", end - start)
     for i in top:
-        layer, _name, start, end, _p = spans[i]
+        layer, _name, start, end, _p, _q = spans[i]
         if layer in ("plans", "operators", "streaming"):
             add(f"{layer}.build_s", end - start)
 
-    # jobs by the innermost span open at submission time
-    def innermost(t: float):
+    # jobs by the innermost span of their query open at submission time
+    spans_of: dict[str, list[int]] = {}
+    for i, s in enumerate(spans):
+        spans_of.setdefault(s[5], []).append(i)
+
+    def innermost(query: str, t: float):
         best = None
-        for i, s in enumerate(spans):
+        for i in spans_of.get(query, ()):
+            s = spans[i]
             if s[2] <= t <= s[3] and (best is None or s[2] >= spans[best][2]):
                 best = i
         return best
@@ -270,12 +306,12 @@ def layer_metrics(
         return i
 
     job_owner = {}
-    for jid, t_submit in log["jobs"].items():
-        ex = owner(t_submit)
+    for jid, (t_submit, query) in log["jobs"].items():
+        ex = by_id.get(query)
         if ex is None:
             continue
         job_owner[jid] = ex
-        i = innermost(t_submit)
+        i = innermost(query, t_submit)
         if i is None:
             continue
         layer = spans[i][0]
@@ -311,19 +347,17 @@ def layer_metrics(
         add("spark.no_task_s", ex["end"] - ex["start"] - busy)
         add("action.result_rows", ex["rows"])
 
-    # streaming progress events: trigger phases and state store
+    # streaming progress events of the traced passes: trigger phases
+    first = min((e["start"] for e in executions), default=0.0)
+    last = max((e["end"] for e in executions), default=0.0)
     for p in log["progress"]:
-        if owner(_epoch(p["timestamp"])) is None:
+        if not first <= _epoch(p["timestamp"]) <= last:
             continue
         d = p.get("durationMs") or {}
         add("streaming.triggers", 1)
         add("streaming.add_batch_s", d.get("addBatch", 0) / 1e3)
         add("streaming.query_planning_s", d.get("queryPlanning", 0) / 1e3)
         add("streaming.commit_s", (d.get("walCommit", 0) + d.get("commitOffsets", 0)) / 1e3)
-        for op in p.get("stateOperators") or ():
-            add("streaming.state_commit_s", op.get("commitTimeMs", 0) / 1e3)
-            add("streaming.state_rows", op.get("numRowsTotal", 0))
-            add("streaming.state_memory_mb", op.get("memoryUsedBytes", 0) / 2**20)
 
     task_s = out.pop("_task_s", 0.0)
     res = {k: v / n_pass for k, v in out.items()}

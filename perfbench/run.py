@@ -9,10 +9,10 @@ Run from the repository root. One run:
    ``.perfbench/`` in the current directory;
 2. times readiness in a fresh process (``get_spark()`` plus importing
    ``__spark_entry__``) -- once in a probe process and once in the worker;
-3. runs the workload in the worker (``worker.py``): one warm-up pass, then
-   the passes that fit ``--seconds`` at the workload's nominal pass time,
-   every result checked against the
-   warm-up pass's digest and every warm-up result against its DuckDB oracle;
+3. runs the workload in the worker (``worker.py``): two untimed warm-up
+   passes, then the passes that fit ``--seconds`` at the workload's nominal
+   pass time (at least two), every result checked against the first warm-up
+   pass's digest and every first-pass result against its DuckDB oracle;
 4. prints a summary and, as the last line, one JSON object with the
    end-to-end metrics (``--trace 0``) or the per-layer metrics
    (``--trace 1``) named in ``BENCHMARK.json``.
@@ -27,6 +27,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import shlex
 import shutil
 import signal
 import statistics
@@ -164,8 +165,11 @@ def _run(args, spec: dict, root: str, work: str, run_id: str, t_begin: float) ->
             "TMPDIR": tmp,
         }
     )
+    # the JVM's performance-counter file would go to /tmp whatever
+    # java.io.tmpdir says; keep the counters in memory instead
+    java_opts = f"-Djava.io.tmpdir={tmp} -XX:+PerfDisableSharedMem"
     submit = [
-        f"--driver-java-options -Djava.io.tmpdir={tmp}",
+        f"--driver-java-options {shlex.quote(java_opts)}",
         f"--conf spark.sql.warehouse.dir={os.path.join(work, 'warehouse')}",
     ]
     if args.trace:
@@ -206,7 +210,7 @@ def _run(args, spec: dict, root: str, work: str, run_id: str, t_begin: float) ->
         rep = json.load(f)
 
     lat = [e["latency_s"] for e in rep["executions"]]
-    pass_s = [p["s"] for p in rep["passes"] if p["complete"] and not p["traced"]]
+    pass_s = [p["s"] for p in rep["passes"] if p["complete"]]
     setups = [probe["setup"], rep["setup"]]
     bad_oracle = {n: m for n, m in rep["oracle"].items() if m not in ("ok", "no oracle")}
     # executions that raised, returned another digest or were never run,
@@ -232,7 +236,7 @@ def _run(args, spec: dict, root: str, work: str, run_id: str, t_begin: float) ->
         f"{n}={v:.3f}" for n, v in sorted(rep["warmup_latency_s"].items())))
     print("median latency_s: " + " ".join(
         f"{n}={statistics.median(v):.3f}" for n, v in sorted(by_query.items())))
-    print("pass_s: " + " ".join(f"{p['s']:.2f}{'T' if p['traced'] else ''}" for p in rep["passes"]))
+    print("pass_s: " + " ".join(f"{p['s']:.2f}" for p in rep["passes"]))
     for fl in rep["failures"][:20]:
         print(f"FAILED pass={fl['pass']} {fl['name']}: {fl['error']}")
     for n, m in bad_oracle.items():
@@ -243,9 +247,14 @@ def _run(args, spec: dict, root: str, work: str, run_id: str, t_begin: float) ->
         layers["session.start_s"] = statistics.median(s["start_s"] for s in setups)
         layers["session.import_s"] = statistics.median(s["import_s"] for s in setups)
         layers["session.jvm_rss_peak_mb"] = rep.get("session_rss_peak_mb", 0.0)
-        traced = [p["s"] for p in rep["passes"] if p["complete"] and p["traced"]]
-        layers["trace.pass_s"] = statistics.median(traced) if traced else 0.0
-        layers["trace.overhead_s"] = layers["trace.pass_s"] - statistics.median(pass_s) if traced else 0.0
+        layers["trace.pass_s"] = statistics.median(pass_s)
+        # spans recorded per pass times the measured cost of one, plus the
+        # query-property call made per query
+        cost = rep.get("trace_unit_cost_s", {"span_s": 0.0, "property_s": 0.0})
+        layers["trace.overhead_s"] = (
+            layers.pop("trace.spans", 0.0) * cost["span_s"]
+            + len(WORKLOADS[args.workload].queries) * cost["property_s"]
+        )
         values = {m["name"]: layers.get(m["name"], 0.0) for m in spec["per_layer"]}
         units = {m["name"]: m["unit"] for m in spec["per_layer"]}
     else:

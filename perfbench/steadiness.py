@@ -15,6 +15,7 @@ import argparse
 import json
 import os
 import platform
+import re
 import statistics
 import subprocess
 import sys
@@ -44,8 +45,10 @@ def main() -> int:
         )
         lines = proc.stdout.strip().splitlines()
         result = json.loads(lines[-1]) if proc.returncode == 0 and lines else None
+        steal = re.search(r"host_steal=([0-9.]+)", lines[0]) if lines else None
         runs.append(
             {"seed": seed, "rc": proc.returncode, "wall_s": time.monotonic() - t,
+             "host_steal": float(steal.group(1)) if steal else None,
              "summary": lines[:-1] if result else proc.stderr[-2000:], "result": result}
         )
         print(f"seed {seed}: rc={proc.returncode} {runs[-1]['wall_s']:.0f}s "
@@ -66,6 +69,7 @@ def main() -> int:
         "run_seconds": spec["run_seconds"],
         "host": {"cpus": len(os.sched_getaffinity(0)), "machine": platform.machine()},
         "all_correct": all(r["result"] and r["result"]["correct"] for r in runs),
+        "host_steal": [r["host_steal"] for r in runs],
         "spread": spread,
         "runs": runs,
     }

@@ -1,23 +1,20 @@
 """One fresh benchmark process: become ready, then run a workload.
 
 ``--setup-probe`` only times readiness (``get_spark()`` plus importing
-``__spark_entry__``) and exits. Otherwise the process runs one untimed
-warm-up pass, which also records each query's reference digest, then as
-many timed passes as fit ``--seconds`` at the workload's nominal pass time,
-then checks the warm-up results against the queries' DuckDB oracles. It
-writes one JSON report to ``--out`` and exits without stopping the JVM;
-``run.py`` stops every process the run started.
+``__spark_entry__``) and exits. Otherwise the process runs
+``WARMUP_PASSES`` untimed warm-up passes (the first records each query's
+reference digest), then the workload's timed passes, then checks the first
+warm-up pass's results against the queries' DuckDB oracles. It writes one
+JSON report to ``--out`` and exits without stopping the JVM; ``run.py``
+stops every process the run started.
 """
 
 from __future__ import annotations
 
 import argparse
-import collections
-import datetime
 import decimal
 import gc
 import hashlib
-import importlib
 import json
 import os
 import random
@@ -25,70 +22,33 @@ import sys
 import time
 import traceback
 
+from tests import oracle_utils as ou
 
-def _canon(v):
-    """Order-free, print-stable form of one value; doubles keep 9 digits."""
-    if isinstance(v, float):
-        return "NaN" if v != v else float(f"{v:.9g}") + 0.0
+#: untimed passes before the timed ones. The first pass of a fresh JVM is
+#: 3-5x slower than a warm one and the second still 10-40 % slower (JIT
+#: compilation of the driver's planner code). A third would cost each
+#: llm_pipeline run another 6-8 s, more than the run time allows, though its
+#: timed passes still fall by about 10 % each.
+WARMUP_PASSES = 2
+
+
+def _round9(v):
+    """Doubles and decimals to 9 significant digits, recursively; anything
+    else unchanged (``oracle_utils._norm`` normalizes the rest)."""
+    if isinstance(v, float) and v == v:
+        return float(f"{v:.9g}") + 0.0
     if isinstance(v, decimal.Decimal):
         return float(f"{float(v):.9g}") + 0.0
     if isinstance(v, (list, tuple)):
-        return tuple(_canon(x) for x in v)
-    if isinstance(v, dict):
-        return tuple(sorted((repr(k), _canon(x)) for k, x in v.items()))
-    if isinstance(v, (bytes, bytearray)):
-        return bytes(v).hex()
-    if isinstance(v, (datetime.date, datetime.datetime)):
-        return v.isoformat()
+        return tuple(_round9(x) for x in v)
     return v
 
 
 def digest(rows) -> str:
-    """Row count plus an order-insensitive hash of the rows."""
-    keys = sorted(repr(_canon(tuple(r))) for r in rows)
+    """Row count plus an order-insensitive hash of the rows, normalized as
+    the oracle check normalizes them."""
+    keys = sorted(repr(ou._norm(_round9(tuple(r)))) for r in rows)
     return f"{len(keys)}:" + hashlib.sha1("\n".join(keys).encode()).hexdigest()
-
-
-class _TmpRedirect:
-    """Stand-in for ``os`` inside a package module that hard-codes ``/tmp``
-    paths: ``path.join`` rewrites them under this run's own directory."""
-
-    def __init__(self, root: str):
-        outer = self
-
-        class _Path:
-            def __getattr__(self, name):
-                return getattr(os.path, name)
-
-            @staticmethod
-            def join(first, *rest):
-                return os.path.join(outer.fix(first), *rest)
-
-        self._root, self.path = root, _Path()
-
-    def fix(self, p):
-        if isinstance(p, str) and p.startswith("/tmp/"):
-            return os.path.join(self._root, p[len("/tmp/"):])
-        return p
-
-    def __getattr__(self, name):
-        return getattr(os, name)
-
-
-def redirect_tmp(root: str) -> None:
-    """Keep every file the package writes inside ``root``."""
-    redirect = _TmpRedirect(root)
-    for name in (
-        "datafusion_impl_spark.streaming",
-        "datafusion_impl_spark.sources.queries",
-        "datafusion_impl_spark.sources.pydatasource",
-    ):
-        mod = importlib.import_module(name)
-        for attr, val in list(vars(mod).items()):
-            if isinstance(val, str) and val.startswith("/tmp/"):
-                setattr(mod, attr, redirect.fix(val))
-        if getattr(mod, "os", None) is os:
-            mod.os = redirect
 
 
 def _jvm_dead(exc: BaseException) -> bool:
@@ -139,9 +99,13 @@ def main() -> int:
     import layers as tr
     from workloads import WORKLOADS
 
+    from datafusion_impl_spark import streaming
+
     spark.sparkContext.setLogLevel("ERROR")
     wl = WORKLOADS[args.workload]
-    redirect_tmp(args.tmp)
+    # the streaming CDC query keeps its feed, state and checkpoint under this
+    # module constant; point it into the run directory
+    streaming._CDC_ROOT = os.path.join(args.tmp, "stream_cdc")
     tracer = tr.Tracer()
     if args.trace:
         tr.install(tracer, entry)
@@ -158,12 +122,17 @@ def main() -> int:
     warmup_latency: dict[str, float] = {}
     jvm_dead = False
 
-    def run(name: str, p: int, traced: bool) -> dict | None:
+    def run(name: str, p: int, timed: bool) -> dict | None:
         nonlocal jvm_dead
+        ex = {"id": f"{p}:{name}", "pass": p, "name": name}
+        traced = bool(args.trace) and timed
+        if traced:
+            # every job the query starts carries this id, in its own thread
+            # or in the stream threads it starts, which inherit it
+            sc.setLocalProperty(tr.QUERY_PROPERTY, ex["id"])
+            tracer.query = ex["id"]
         tracer.enabled = traced
-        if args.trace:
-            sc.setJobGroup(f"{p}:{name}", name)
-        ex = {"pass": p, "name": name, "traced": traced, "start": time.time()}
+        ex["start"] = time.time()
         t = time.perf_counter()
         try:
             with tracer.span("query", name):
@@ -182,7 +151,7 @@ def main() -> int:
         d = digest(rows)
         if p == 0:
             reference[name] = d
-            warm[name] = (df.columns, rows)
+            warm[name] = (df, rows)
             warmup_latency[name] = ex["latency_s"]
         elif d != reference.get(name):
             failures.append(
@@ -191,7 +160,7 @@ def main() -> int:
             return None
         return ex
 
-    def one_pass(p: int, traced: bool) -> None:
+    def one_pass(p: int, timed: bool) -> None:
         nonlocal attempted
         order = list(wl.queries)
         rng.shuffle(order)
@@ -207,67 +176,59 @@ def main() -> int:
             if jvm_dead:
                 failures.append({"pass": p, "name": name, "error": "not run: JVM gone"})
                 continue
-            ex = run(name, p, traced)
+            ex = run(name, p, timed)
             if ex is not None:
                 done += 1
-                if p > 0:
+                if timed:
                     executions.append(ex)
-        if p > 0:
-            passes.append(
-                {"pass": p, "traced": traced, "s": time.perf_counter() - t, "complete": done == len(order)}
-            )
+        if timed:
+            passes.append({"pass": p, "s": time.perf_counter() - t, "complete": done == len(order)})
 
     t_warm = time.perf_counter()
-    one_pass(0, False)
+    for p in range(WARMUP_PASSES):
+        one_pass(p, False)
     start = time.perf_counter()
     report["warmup_s"] = start - t_warm
     report["warmup_latency_s"] = warmup_latency
-    n_passes = max(1, round(args.seconds / wl.nominal_pass_s))
-    if args.trace:
-        # traced and plain passes in T P P T blocks, so the drift of a warming
-        # JVM cancels out of their difference, the tracing overhead
-        n_passes = 4 * -(-n_passes // 4)
-    for p in range(1, n_passes + 1):
+    n_passes = max(2, round(args.seconds / wl.nominal_pass_s))
+    for p in range(WARMUP_PASSES, WARMUP_PASSES + n_passes):
         if jvm_dead:
             break
-        one_pass(p, bool(args.trace) and p % 4 in (0, 1))
+        one_pass(p, True)
     report["measure_s"] = time.perf_counter() - start
 
+    t_oracle = time.perf_counter()
+    report["oracle"] = check_oracles(registry, wl.queries, warm, args.data)
+    report["oracle_s"] = time.perf_counter() - t_oracle
     if args.trace and not jvm_dead:
         report["session_rss_peak_mb"] = _rss_peak_mb(spark)
-    if args.trace and not jvm_dead:
+        report["trace_unit_cost_s"] = tr.unit_costs(sc)
         spark.stop()  # flushes the event log
-    t_oracle = time.perf_counter()
-    report["oracle"] = check_oracles(entry, wl.queries, warm, args.data)
-    report["oracle_s"] = time.perf_counter() - t_oracle
     report["executions"] = executions
     report["passes"] = passes
     report["failures"] = failures
     report["attempted"] = attempted
     if args.trace:
-        traced = [e for e in executions if e["traced"]]
         log = tr.read_event_log(args.eventlog)
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 1))
-        report["layers"] = tr.layer_metrics(tracer.spans, traced, log, cores)
+        report["layers"] = tr.layer_metrics(tracer.spans, executions, log, cores)
     with open(args.out, "w") as f:
         json.dump(report, f)
     return 0
 
 
-def _rowset(columns, rows) -> collections.Counter:
-    order = sorted(range(len(columns)), key=lambda i: columns[i])
-    return collections.Counter(tuple(_canon(r[i]) for i in order) for r in rows)
-
-
-def check_oracles(entry, names, warm: dict, data_dir: str) -> dict:
-    """Compare each warm-up result with its DuckDB oracle over the same
-    tables: same columns, same multiset of rows, doubles to 9 digits (the
-    engines sum floats in different orders, so last digits may differ)."""
+def check_oracles(registry, names, warm: dict, data_dir: str) -> dict:
+    """Compare each query's first warm-up result with its DuckDB oracle over
+    the same tables, through the repository's comparator gates
+    (``tests/oracle_utils``): no array/map/struct columns, the same column
+    names, the same dtype family per column, then the same multiset of rows
+    after ``rows_to_set``'s normalization. Doubles are rounded to 9
+    significant digits first: the engines sum floats in different orders,
+    so on seeded data the last digits can differ."""
     import duckdb
 
     from datafusion_impl_spark.sources.registry import TABLES
 
-    oracles = entry.oracle_sql()
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
@@ -275,25 +236,36 @@ def check_oracles(entry, names, warm: dict, data_dir: str) -> dict:
         )
     out = {}
     for name in names:
-        if name not in oracles:
+        # only this query's oracle is resolved: some oracles are callables
+        # that stage files of their own
+        oracle = getattr(sys.modules[registry[name].__module__], "ORACLES", {}).get(name)
+        if oracle is None:
             out[name] = "no oracle"
             continue
         if name not in warm:
             out[name] = "FAIL: query failed"
             continue
-        cols, rows = warm[name]
+        df, rows = warm[name]
         try:
-            rel = con.sql(oracles[name])
-            d_cols, d_rows = rel.columns, rel.fetchall()
+            rel = con.sql(oracle() if callable(oracle) else oracle)
+            bad = ou._complex_columns(df)
+            if bad:
+                out[name] = f"FAIL: array/map/struct columns {bad}"
+                continue
+            if sorted(df.columns) != sorted(rel.columns):
+                out[name] = f"FAIL: columns {sorted(df.columns)} != {sorted(rel.columns)}"[:300]
+                continue
+            dt_bad = ou._dtype_mismatches(df, rel)
+            if dt_bad:
+                out[name] = ("FAIL: dtype families " + "; ".join(dt_bad))[:300]
+                continue
+            d_rows = rel.fetchall()
         except Exception as e:  # an oracle error is a failed check
-            out[name] = f"FAIL: oracle {type(e).__name__}: {e}"[:300]
+            out[name] = f"FAIL: {type(e).__name__}: {e}"[:300]
             continue
-        if sorted(cols) != sorted(d_cols):
-            out[name] = f"FAIL: columns {sorted(cols)} != {sorted(d_cols)}"[:300]
-        elif _rowset(cols, rows) != _rowset(d_cols, d_rows):
-            out[name] = f"FAIL: rows differ ({len(rows)} vs {len(d_rows)} rows)"
-        else:
-            out[name] = "ok"
+        _, s_set = ou.rows_to_set(df.columns, [_round9(tuple(r)) for r in rows])
+        _, d_set = ou.rows_to_set(rel.columns, [_round9(r) for r in d_rows])
+        out[name] = "ok" if s_set == d_set else f"FAIL: rows differ ({len(rows)} vs {len(d_rows)} rows)"
     con.close()
     return out
 

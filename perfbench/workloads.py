@@ -15,8 +15,8 @@ from dataclasses import dataclass
 @dataclass(frozen=True)
 class Workload:
     queries: tuple[str, ...]
-    #: pass time on a 4-core host when the workload was defined; a run
-    #: measures ``round(seconds / nominal_pass_s)`` passes (at least one), so
+    #: warm pass time on a 4-core host when the workload was defined; a run
+    #: measures ``round(seconds / nominal_pass_s)`` passes (at least two), so
     #: every run of a workload times the same number of query executions
     nominal_pass_s: float
 
@@ -35,22 +35,23 @@ WORKLOADS = {
             "regexp_safe_edge_cases",
             "asof_join_prior_click",
         ),
-        nominal_pass_s=3.5,
+        nominal_pass_s=2.8,
     ),
-    # LLM-pipeline operators and streams: winnowing near-dup detection with
-    # eager materialize jobs, exact dedup, an ANN query under the
-    # bounded-iteration pin, language ID, and an availableNow stream with a
-    # state store. The stream is the one slow query, so the median falls
-    # among the four light ones. No plans query runs, so this is the bypass
+    # LLM-pipeline operators and a stream: exact dedup, count-min-sketch
+    # heavy hitters with an eager materialize job, an ANN query under the
+    # bounded-iteration pin, language ID, and an availableNow CDC stream
+    # whose foreachBatch merges each micro-batch into a parquet state
+    # table. The stream is the one slow query, so the median falls among
+    # the four light ones. No plans query runs, so this is the bypass
     # partner for relational changes.
     "llm_pipeline": Workload(
         queries=(
-            "dedup_documents_winnowing",
             "dedup_documents_exact",
+            "heavy_hitters_cms",
             "ann_cosine_topk",
             "text_language_id",
-            "stream_bloom_ingest_filter",
+            "stream_cdc_merge_stats",
         ),
-        nominal_pass_s=6.0,
+        nominal_pass_s=5.4,
     ),
 }
