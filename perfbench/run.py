@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Benchmark entry point.
 
-    python3 perfbench/run.py --workload sql_analytics --seed 1 --seconds 20 --trace 0
+    python3 perfbench/run.py --workload sql_analytics --seed 1 --seconds 15 --trace 0
 
 Run from the repository root. One run:
 
@@ -17,9 +17,11 @@ Run from the repository root. One run:
    end-to-end metrics (``--trace 0``) or the per-layer metrics
    (``--trace 1``) named in ``BENCHMARK.json``.
 
-Only ``SPARK_GRAFT_CPUS`` (the usable core count) and ``SPARK_LOCAL_DIRS``
-are set for the program; the package root goes on ``PYTHONPATH`` so Spark's
-Python workers can import it, and temporary files stay under ``.perfbench/``.
+The program sees ``SPARK_GRAFT_CPUS`` (the usable core count) and
+``SPARK_LOCAL_DIRS``; the package root goes on ``PYTHONPATH`` so Spark's
+Python workers can import it. ``TMPDIR``, ``java.io.tmpdir``, the warehouse
+directory and the JVM's counters are kept out of ``/tmp``, so every file a
+run writes stays under ``.perfbench/``.
 """
 
 from __future__ import annotations
