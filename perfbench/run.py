@@ -9,10 +9,11 @@ Run from the repository root. One run:
    ``.perfbench/`` in the current directory;
 2. times readiness in a fresh process (``get_spark()`` plus importing
    ``__spark_entry__``) -- once in a probe process and once in the worker;
-3. runs the workload in the worker (``worker.py``): two untimed warm-up
-   passes, then the passes that fit ``--seconds`` at the workload's nominal
-   pass time (at least two), every result checked against the first warm-up
-   pass's digest and every first-pass result against its DuckDB oracle;
+3. runs the workload in the worker (``worker.py``): the workload's untimed
+   warm-up passes, then the passes that fit ``--seconds`` at its nominal
+   pass time (at least six), every result checked against the first
+   warm-up pass's digest and every first-pass result against its DuckDB
+   oracle;
 4. prints a summary and, as the last line, one JSON object with the
    end-to-end metrics (``--trace 0``) or the per-layer metrics
    (``--trace 1``) named in ``BENCHMARK.json``.

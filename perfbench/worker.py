@@ -1,12 +1,12 @@
 """One fresh benchmark process: become ready, then run a workload.
 
 ``--setup-probe`` only times readiness (``get_spark()`` plus importing
-``__spark_entry__``) and exits. Otherwise the process runs
-``WARMUP_PASSES`` untimed warm-up passes (the first records each query's
-reference digest), then the workload's timed passes, then checks the first
-warm-up pass's results against the queries' DuckDB oracles. It writes one
-JSON report to ``--out`` and exits without stopping the JVM; ``run.py``
-stops every process the run started.
+``__spark_entry__``) and exits. Otherwise the process runs the workload's
+untimed warm-up passes (the first records each query's reference digest),
+then its timed passes, then checks the first warm-up pass's results against
+the queries' DuckDB oracles. It writes one JSON report to ``--out`` and
+exits without stopping the JVM; ``run.py`` stops every process the run
+started.
 """
 
 from __future__ import annotations
@@ -24,12 +24,11 @@ import traceback
 
 from tests import oracle_utils as ou
 
-#: untimed passes before the timed ones. The first pass of a fresh JVM is
-#: 3-5x slower than a warm one and the second still 10-40 % slower (JIT
-#: compilation of the driver's planner code). A third would cost each
-#: llm_pipeline run another 6-8 s, more than the run time allows, though its
-#: timed passes still fall by about 10 % each.
-WARMUP_PASSES = 2
+#: timed passes a run makes at least. The tail is the highest percentile
+#: with ten samples beyond it; with five or six queries a pass, six passes
+#: put it among the samples of one query, whereas below 21 samples it would
+#: be the run's single slowest sample.
+MIN_TIMED_PASSES = 6
 
 
 def _round9(v):
@@ -185,13 +184,13 @@ def main() -> int:
             passes.append({"pass": p, "s": time.perf_counter() - t, "complete": done == len(order)})
 
     t_warm = time.perf_counter()
-    for p in range(WARMUP_PASSES):
+    for p in range(wl.warmup_passes):
         one_pass(p, False)
     start = time.perf_counter()
     report["warmup_s"] = start - t_warm
     report["warmup_latency_s"] = warmup_latency
-    n_passes = max(2, round(args.seconds / wl.nominal_pass_s))
-    for p in range(WARMUP_PASSES, WARMUP_PASSES + n_passes):
+    n_passes = max(MIN_TIMED_PASSES, round(args.seconds / wl.nominal_pass_s))
+    for p in range(wl.warmup_passes, wl.warmup_passes + n_passes):
         if jvm_dead:
             break
         one_pass(p, True)
