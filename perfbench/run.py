@@ -166,10 +166,12 @@ def _run(args, spec: dict, root: str, work: str, run_id: str, t_begin: float) ->
                 [root] + [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
             ),
             "TMPDIR": tmp,
+            # the JVMs' performance-counter files would go to /tmp whatever
+            # java.io.tmpdir says; keep the counters in memory instead, for
+            # spark-submit's launcher JVM here and the driver JVM below
+            "SPARK_LAUNCHER_OPTS": "-XX:+PerfDisableSharedMem",
         }
     )
-    # the JVM's performance-counter file would go to /tmp whatever
-    # java.io.tmpdir says; keep the counters in memory instead
     java_opts = f"-Djava.io.tmpdir={tmp} -XX:+PerfDisableSharedMem"
     submit = [
         f"--driver-java-options {shlex.quote(java_opts)}",

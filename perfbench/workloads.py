@@ -59,11 +59,11 @@ WORKLOADS = {
             "text_language_id",
             "stream_cdc_merge_stats",
         ),
-        # the first pass takes 16-22 s; the second is still about 20 %
-        # slower than the 5.0-5.6 s plateau the third reaches. The second
-        # is timed: the run's six timed passes leave no room for another
-        # warm-up pass, and as the slowest of six it does not move the
-        # median pass.
+        # the first pass takes 15-22 s and the second is still 10-20 %
+        # slower than the third; in some hours the pass time keeps falling
+        # to the last timed pass. The second is timed: the run's six timed
+        # passes leave no room for another warm-up pass, and as the slowest
+        # of six it does not move the median pass.
         nominal_pass_s=5.3,
         warmup_passes=1,
     ),
